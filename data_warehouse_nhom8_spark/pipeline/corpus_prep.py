@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_warehouse_nhom8_spark.operators.corpus import chunk_documents, hash_split_col
@@ -36,6 +36,7 @@ from data_warehouse_nhom8_spark.operators.text import (
     exact_dedup,
     token_count_col,
 )
+from data_warehouse_nhom8_spark.pipeline import count_on_write
 from data_warehouse_nhom8_spark.pipeline.ledger import RunLedger
 from data_warehouse_nhom8_spark.sources.snapshots import snapshot_overwrite, snapshot_read
 from data_warehouse_nhom8_spark.regexes import WS_SPLIT
@@ -187,15 +188,16 @@ def run_corpus_prep(
                 max_dup_fraction=max_span_dup_fraction,
                 window=span_window,
             )
+        corpus, corpus_obs = count_on_write(corpus)
         snapshot_overwrite(corpus, f"{out_root}/corpus")
         stored = snapshot_read(spark, f"{out_root}/corpus")
 
-        chunks = chunk_documents(
-            stored, chunk_tokens=chunk_tokens, stride=stride
+        chunks, chunks_obs = count_on_write(
+            chunk_documents(stored, chunk_tokens=chunk_tokens, stride=stride)
         )
         snapshot_overwrite(chunks, f"{out_root}/chunks")
 
-        summary = (
+        summary, summary_obs = count_on_write(
             stored.groupBy("split", "lang_pred")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
@@ -204,10 +206,11 @@ def run_corpus_prep(
         )
         snapshot_overwrite(summary, f"{out_root}/summary")
 
+        # row counts come from observations on the writes
         report = {
-            "corpus_rows": stored.count(),
-            "chunk_rows": snapshot_read(spark, f"{out_root}/chunks").count(),
-            "summary_rows": snapshot_read(spark, f"{out_root}/summary").count(),
+            "corpus_rows": corpus_obs.get["rows"],
+            "chunk_rows": chunks_obs.get["rows"],
+            "summary_rows": summary_obs.get["rows"],
         }
         if ledger is not None:
             ledger.close_run(
@@ -289,21 +292,31 @@ def build_training_mix(
             shuffled, seq_len=seq_len, shard_col=strata_col, id_col="shuffle_key"
         )
 
+        # counts and token sums observed on the writes themselves
+        sample_obs, man_obs = Observation(), Observation()
         snapshot_overwrite(weights_df, f"{out_root}/mix_weights")
-        snapshot_overwrite(shuffled, f"{out_root}/mix_sample")
-        snapshot_overwrite(manifest, f"{out_root}/mix_manifest")
-
-        sample = snapshot_read(spark, f"{out_root}/mix_sample")
-        man = snapshot_read(spark, f"{out_root}/mix_manifest")
-        sampled_tokens = sample.agg(
-            F.sum(token_count_col("text")).alias("t")
-        ).collect()[0]["t"] or 0
-        packed_tokens = man.agg(F.sum("tokens_started").alias("t")).collect()[0]["t"] or 0
+        snapshot_overwrite(
+            shuffled.observe(
+                sample_obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(token_count_col("text")).alias("tokens"),
+            ),
+            f"{out_root}/mix_sample",
+        )
+        snapshot_overwrite(
+            manifest.observe(
+                man_obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.sum("tokens_started").alias("tokens"),
+            ),
+            f"{out_root}/mix_manifest",
+        )
+        sample, man = sample_obs.get, man_obs.get
         report = {
-            "sampled_docs": sample.count(),
-            "sampled_tokens": int(sampled_tokens),
-            "packed_tokens": int(packed_tokens),
-            "n_sequences": man.count(),
+            "sampled_docs": sample["rows"],
+            "sampled_tokens": int(sample["tokens"] or 0),
+            "packed_tokens": int(man["tokens"] or 0),
+            "n_sequences": man["rows"],
             "token_budget": token_budget,
         }
         if ledger:

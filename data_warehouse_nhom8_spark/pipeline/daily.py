@@ -15,6 +15,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from data_warehouse_nhom8_spark import schemas
+from data_warehouse_nhom8_spark.pipeline import count_on_write
 from data_warehouse_nhom8_spark.sources.snapshots import snapshot_overwrite, snapshot_read
 from data_warehouse_nhom8_spark.pipeline.config import EngineConfig
 from data_warehouse_nhom8_spark.pipeline.datamart import rebuild_datamart
@@ -85,7 +86,10 @@ def run_daily_pipeline(
     n_buckets: int | str | None = None,
 ) -> dict:
     """Extract → staging → warehouse → datamart for one day.
-    Returns per-stage row counts for monitoring.
+    Returns per-stage row counts for monitoring, each observed on the
+    write that produced the rows (no re-read of a written table; a
+    day whose merge the ledger gate skipped wrote nothing, so its
+    `warehouse_rows` is counted from the stored table).
 
     `bucketed` (DEFAULT ON, round 8): the staging snapshot is bucketed
     on `job_id` (the D1 merge key — staging/init_staging_db_v2.sql:69
@@ -167,6 +171,7 @@ def run_daily_pipeline(
     from data_warehouse_nhom8_spark.sources.snapshots import snapshot_bucket_spec
 
     stg_create = bucketed and snapshot_bucket_spec(cfg.staging_path) is None
+    staged, staged_obs = count_on_write(staged)
     snapshot_overwrite(
         staged,
         cfg.staging_path,
@@ -174,8 +179,8 @@ def run_daily_pipeline(
         bucket_by=["job_id"] if stg_create else None,
         n_buckets=n_buckets,
     )
+    report["staging_rows"] = staged_obs.get["rows"]
     staging_df = snapshot_read(spark, cfg.staging_path, schemas.STAGING_JOBS)
-    report["staging_rows"] = staging_df.count()
 
     # 3. warehouse SCD2 merge (ledger-gated; snapshot persisted BEFORE
     # the Success row so a crash can't strand a done-but-unwritten day)
@@ -194,14 +199,17 @@ def run_daily_pipeline(
     # same creation-only rule as staging: declare the layout when the
     # warehouse table doesn't exist yet, inherit the sticky spec after
     wh_create = bucketed and wh_spec is None
+    written: dict = {}
 
     def persist(snapshot):
+        snapshot, obs = count_on_write(snapshot)
         snapshot_overwrite(
             snapshot,
             cfg.warehouse_path,
             bucket_by=wh_buckets if wh_create else None,
             n_buckets=n_buckets,
         )
+        written["rows"] = obs.get["rows"]
         return snapshot_read(spark, cfg.warehouse_path)
 
     load_day_to_warehouse(
@@ -213,7 +221,7 @@ def run_daily_pipeline(
         keep_norm_keys=keep_nk,
     )
     wh = snapshot_read(spark, cfg.warehouse_path)
-    report["warehouse_rows"] = wh.count()
+    report["warehouse_rows"] = written["rows"] if written else wh.count()
 
     # 4. datamart over live rows
     live = wh.filter(F.col("expired") == F.lit("9999-12-31").cast("date"))

@@ -17,6 +17,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_warehouse_nhom8_spark.pipeline import count_on_write
+
 
 @dataclass(frozen=True)
 class AggSpec:
@@ -138,7 +140,8 @@ def rebuild_datamart(
     shared_scan: bool = True,
 ) -> dict[str, int]:
     """Drop-and-recreate each aggregate table (S8: overwrite) and
-    return row counts for the run ledger."""
+    return row counts for the run ledger, observed on each table's
+    write."""
     spark = fact.sparkSession
     if shared_scan:
         # materialize the one Expand pass, then split the (tiny) wide
@@ -167,7 +170,7 @@ def rebuild_datamart(
 
     counts: dict[str, int] = {}
     for name, df in tables.items():
+        df, obs = count_on_write(df)
         df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
-        # count the written output (tiny) instead of re-running the plan
-        counts[name] = spark.read.parquet(f"{out_dir}/{name}").count()
+        counts[name] = obs.get["rows"]
     return counts

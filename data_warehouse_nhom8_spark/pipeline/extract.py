@@ -13,7 +13,9 @@ schema evolution by projection, SURVEY §1).
 
 The engine replaces the shell CSV concat with the multi-file scan
 (U1 = implicit union of the partition directory), and the
-skip-if-done complement with the ledger's left-anti `runnable` (U2).
+skip-if-done complement (U2) with the ledger's driver-side `is_done`
+gate per source (`RunLedger.runnable` is the same rule as a Spark
+left-anti join).
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_warehouse_nhom8_spark import schemas
+from data_warehouse_nhom8_spark.pipeline import count_on_write
 from data_warehouse_nhom8_spark.pipeline.ledger import RunLedger
 from data_warehouse_nhom8_spark.sources import (
     read_partitioned_csv,
@@ -60,8 +63,9 @@ def ingest_source(
         ).withColumn("source", F.lit(source_id)).withColumn(
             "date", F.lit(run_date.isoformat())
         )
-        n = df.count()
+        df, obs = count_on_write(df)
         write_partitioned_csv(df, bronze_path)
+        n = obs.get["rows"]
         if ledger:
             ledger.close_run(
                 log_id, f"extract_{source_id}", run_date, "Success",
@@ -85,18 +89,12 @@ def run_all_sources(
     ledger: RunLedger,
 ) -> dict[str, int]:
     """The master runner (run_all_scrapers.sh): enabled sources minus
-    already-succeeded-today (U2 left-anti via the ledger), each
-    ingested independently; failures don't stop later sources."""
-    enabled = spark.createDataFrame(
-        [(f"extract_{s}",) for s in connectors], "process string"
-    )
-    todo = {
-        r["process"].removeprefix("extract_")
-        for r in ledger.runnable(enabled, run_date).collect()
-    }
+    already-succeeded-today (U2: the ledger's skip-if-done gate per
+    source), each ingested independently; failures don't stop later
+    sources."""
     results: dict[str, int] = {}
     for source_id, conn in connectors.items():
-        if source_id not in todo:
+        if ledger.is_done(f"extract_{source_id}", run_date):
             continue
         try:
             results[source_id] = ingest_source(

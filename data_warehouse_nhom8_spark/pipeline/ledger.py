@@ -7,9 +7,22 @@ the ledger (not exit codes) for skip-if-done and retry decisions
 (reference extract/run_topcv_scraper_with_retry.sh:52-59,186-196).
 
 Here: one parquet table, append-only; status-of-record is the latest
-row per (process, run_date) by log_id. Reads are tiny (control plane),
-writes are appends — safe at any scale because the ledger grows with
-runs, not data.
+row per (process, run_date) by log_id. The ledger grows with runs,
+not data, so its bookkeeping stays on the driver and launches no Spark
+job:
+
+- each append is one parquet file written with pyarrow under a hidden
+  temp name and `os.replace`d into place, so a reader sees a whole
+  file or none (a crashed append leaves only the hidden temp file,
+  which every reader skips);
+- `is_done`, the skip-if-done gate, is a filtered `pyarrow.dataset`
+  read;
+- the monitoring views, `runnable` and `prune` stay Spark DataFrames
+  over the same files.
+
+Every part file is checked against `schemas.RUN_LEDGER` before it is
+read; a foreign file raises, naming the file, instead of silently
+matching nothing.
 """
 
 from __future__ import annotations
@@ -17,12 +30,21 @@ from __future__ import annotations
 import datetime
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from data_warehouse_nhom8_spark import schemas
 from data_warehouse_nhom8_spark.operators.windows import latest_per_key
+
+_ARROW = to_arrow_schema(schemas.RUN_LEDGER)
+_TS = {f.name for f in schemas.RUN_LEDGER.fields if isinstance(f.dataType, T.TimestampType)}
 
 
 class RunLedger:
@@ -30,16 +52,48 @@ class RunLedger:
         self.spark = spark
         self.path = path
 
+    def _files(self) -> list[str]:
+        """The visible part files, each checked against RUN_LEDGER.
+        Hidden (`.`) and marker (`_`) names are skipped, as Spark's and
+        pyarrow's own listings skip them."""
+        if not os.path.isdir(self.path):
+            return []
+        files = sorted(
+            os.path.join(self.path, n)
+            for n in os.listdir(self.path)
+            if n.endswith(".parquet") and not n.startswith((".", "_"))
+        )
+        for f in files:
+            _check_schema(f, pq.read_schema(f))
+        return files
+
     def _read(self) -> DataFrame:
-        if not _exists(self.path):
+        files = self._files()
+        if not files:
             return self.spark.createDataFrame([], schemas.RUN_LEDGER)
-        return self.spark.read.schema(schemas.RUN_LEDGER).parquet(self.path)
+        return self.spark.read.schema(schemas.RUN_LEDGER).parquet(*files)
 
     def _append(self, rows: list[dict]) -> None:
-        df = self.spark.createDataFrame(
-            [_fill(r) for r in rows], schemas.RUN_LEDGER
+        """One parquet file per batch, written on the driver. Timestamps
+        are converted exactly as `createDataFrame` converts them (a
+        naive datetime is wall time in the process's local zone), so
+        rows read back the same whichever writer produced them."""
+        ts = T.TimestampType()
+        table = pa.Table.from_pylist(
+            [
+                {k: ts.toInternal(v) if k in _TS else v for k, v in _fill(r).items()}
+                for r in rows
+            ],
+            schema=_ARROW,
         )
-        df.write.mode("append").parquet(self.path)
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, f".{name}.tmp")
+        with open(tmp, "wb") as fh:
+            pq.write_table(table, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, os.path.join(self.path, name))
 
     def open_run(self, process: str, run_date: datetime.date) -> int:
         """Insert a Running row; returns its log_id.
@@ -108,17 +162,16 @@ class RunLedger:
         """Skip-if-done gate: any Success for (process, run_date)
         (reference run_topcv_scraper_with_retry.sh:52-59 — COUNT > 0,
         not latest-row)."""
-        n = (
-            self._read()
-            .filter(
-                (F.col("process") == process)
-                & (F.col("run_date") == F.lit(run_date))
-                & (F.col("status") == "Success")
-            )
-            .limit(1)
-            .count()
+        files = self._files()
+        if not files:
+            return False
+        hit = ds.dataset(files, schema=_ARROW, format="parquet").to_table(
+            columns=["status"],
+            filter=(ds.field("process") == process)
+            & (ds.field("run_date") == run_date)
+            & (ds.field("status") == "Success"),
         )
-        return n > 0
+        return hit.num_rows > 0
 
     def success_rate_view(self) -> DataFrame:
         """Per-process health rollup — the v_scraper_stats monitoring
@@ -239,7 +292,21 @@ class RunLedger:
         return enabled.join(done, on="process", how="left_anti")
 
 
-from data_warehouse_nhom8_spark.sources.snapshots import has_parquet as _exists  # noqa: E402
+def _check_schema(path: str, got: pa.Schema) -> None:
+    """Raise unless a part file has RUN_LEDGER's columns and types.
+    Nullability is not compared (Spark writes every column nullable),
+    nor the timestamp unit and zone (Spark may write INT96 or micros)."""
+    same = got.names == _ARROW.names and all(
+        g.type == w.type
+        or (pa.types.is_timestamp(g.type) and pa.types.is_timestamp(w.type))
+        for g, w in zip(got, _ARROW)
+    )
+    if not same:
+        raise ValueError(
+            f"run ledger part file {path} does not match schemas.RUN_LEDGER: "
+            f"got ({', '.join(f'{f.name} {f.type}' for f in got)}), expected "
+            f"({', '.join(f'{f.name} {f.type}' for f in _ARROW)})"
+        )
 
 
 def _fill(r: dict) -> dict:

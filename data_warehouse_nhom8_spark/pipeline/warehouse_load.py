@@ -11,16 +11,17 @@ observed counts into the ledger.
 
 A5 row-count side-outputs: the reference sums ROW_COUNT() after its
 UPDATE and INSERT branches into load_to_wh_log (load_to_wh.sh:97-103).
-The engine's twin is `merge_metrics`: per-branch counts (expired /
-inserted / carried) computed from the merged snapshot in ONE aggregate
-pass — no extra scan per metric.
+The engine's twin is a set of per-branch counts (expired / inserted /
+live): the load takes them from an observation on the snapshot write
+itself, and `merge_metrics` computes the same counts from any stored
+snapshot in one aggregate pass.
 """
 
 from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from data_warehouse_nhom8_spark.operators.scd2 import CURRENT_SENTINEL, scd2_merge
@@ -53,7 +54,9 @@ def load_day_to_warehouse(
     Success row is written: a Success row for a snapshot that never hit
     storage would make every rerun skip the day and lose the merge —
     the write must commit first, exactly as the reference's SQL commits
-    before its log UPDATE (load_to_wh.sh:97-103)."""
+    before its log UPDATE (load_to_wh.sh:97-103). The ledgered row
+    count is observed on that write; without `persist` nothing is
+    written, and it comes from `merge_metrics` over the plan."""
     day = datetime.date.fromisoformat(day) if isinstance(day, str) else day
     if ledger is not None and ledger.is_done(process, day):
         return warehouse
@@ -72,9 +75,10 @@ def load_day_to_warehouse(
         keep_norm_keys=keep_norm_keys,
     )
     if persist is not None:
-        snapshot = persist(snapshot)
+        obs = Observation()
+        snapshot = persist(snapshot.observe(obs, *_metric_cols(day)))
     if ledger is not None:
-        m = merge_metrics(snapshot, day)
+        m = _as_counts(obs.get) if persist is not None else merge_metrics(snapshot, day)
         ledger.close_run(
             log_id,
             process,
@@ -145,11 +149,9 @@ def warehouse_as_of(
     return df
 
 
-def merge_metrics(snapshot: DataFrame, day: datetime.date) -> dict[str, int]:
-    """The ROW_COUNT() accounting (A5): how many rows this day's merge
-    expired vs inserted, plus the live total — one aggregate pass."""
+def _metric_cols(day: datetime.date) -> list[Column]:
     sentinel = F.lit(CURRENT_SENTINEL).cast("date")
-    row = snapshot.agg(
+    return [
         F.sum(F.when(F.col("expired") == F.lit(day), 1).otherwise(0)).alias("expired_today"),
         F.sum(
             F.when(
@@ -157,5 +159,14 @@ def merge_metrics(snapshot: DataFrame, day: datetime.date) -> dict[str, int]:
             ).otherwise(0)
         ).alias("inserted_today"),
         F.sum(F.when(F.col("expired") == sentinel, 1).otherwise(0)).alias("live_total"),
-    ).collect()[0]
+    ]
+
+
+def _as_counts(row) -> dict[str, int]:
     return {k: int(row[k] or 0) for k in ("expired_today", "inserted_today", "live_total")}
+
+
+def merge_metrics(snapshot: DataFrame, day: datetime.date) -> dict[str, int]:
+    """The ROW_COUNT() accounting (A5): how many rows this day's merge
+    expired vs inserted, plus the live total — one aggregate pass."""
+    return _as_counts(snapshot.agg(*_metric_cols(day)).collect()[0])

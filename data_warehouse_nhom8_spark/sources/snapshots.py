@@ -664,7 +664,14 @@ def safe_overwrite(df: DataFrame, path: str, schema: T.StructType | None = None)
     driver, then overwrite `path` in place as plain parquet. Bounded
     by the ledger's increment-scale row count — never use for data
     tables; those go through `snapshot_overwrite` (distributed,
-    atomic, no driver materialization)."""
+    atomic, no driver materialization).
+
+    The ledger's appends do not come through here: `RunLedger` writes
+    each row batch on the driver with pyarrow as one more part file
+    (hidden temp name, then `os.replace`) beside the files this
+    rewrite leaves. Only its retention sweep (`RunLedger.prune`)
+    rewrites the whole table with this function, replacing every part
+    file and any hidden temp file a crashed append left behind."""
     spark = df.sparkSession
     rows = df.collect()
     out = spark.createDataFrame(rows, schema or df.schema)

@@ -3,7 +3,14 @@
 from __future__ import annotations
 
 import datetime
+import os
+import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from data_warehouse_nhom8_spark import schemas
 from data_warehouse_nhom8_spark.pipeline.config import EngineConfig
 from data_warehouse_nhom8_spark.pipeline.daily import run_daily_pipeline
 from data_warehouse_nhom8_spark.pipeline.ledger import RunLedger
@@ -218,6 +225,142 @@ def test_volume_drift_view_flags_collapsed_source(spark, tmp_path):
     }
     burst = view[("extract_burst", "2025-05-04")]
     assert burst["drift"] is True and burst["ratio"] > 3.0
+
+
+@pytest.fixture
+def ho_chi_minh_tz():
+    """The process runs in the reference's local zone (UTC+7) while the
+    Spark session stays on UTC."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Ho_Chi_Minh"
+    time.tzset()
+    yield
+    if old is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+def _spark_append(spark, path, rows):
+    """The ledger's earlier writer: one createDataFrame + Spark parquet
+    append per row batch."""
+    from data_warehouse_nhom8_spark.pipeline.ledger import _fill
+
+    spark.createDataFrame([_fill(r) for r in rows], schemas.RUN_LEDGER).write.mode(
+        "append"
+    ).parquet(path)
+
+
+def _ledger_runs():
+    """Open + close row pairs over three processes and four days, with
+    naive start/end times carrying microseconds."""
+    t0 = datetime.datetime(2025, 3, 10, 2, 0, 5, 123456)
+    runs = [
+        ("extract_topcv", 0, "Failed", None), ("extract_topcv", 0, "Success", 100),
+        ("extract_topcv", 1, "Success", 104), ("extract_topcv", 2, "Success", 3),
+        ("extract_jobsgo", 0, "Success", 50), ("extract_jobsgo", 1, "Success", 0),
+        ("load_to_wh", 1, "Success", 12), ("load_to_wh", 3, "Failed", None),
+    ]
+    out = []
+    for i, (proc, d, status, n) in enumerate(runs):
+        day = D1 + datetime.timedelta(days=d)
+        start = t0 + datetime.timedelta(days=d, minutes=i)
+        end = start + datetime.timedelta(seconds=37 + i, microseconds=999)
+        lid = 1_000 + 10 * i
+        out.append([
+            {"log_id": lid, "process": proc, "run_date": day, "status": "Running",
+             "start_time": start},
+            {"log_id": lid + 1, "process": proc, "run_date": day, "status": status,
+             "rows_processed": n, "file_path": "/bronze", "start_time": start,
+             "end_time": end, "duration_seconds": int((end - start).total_seconds()),
+             "error_message": "boom" if status == "Failed" else None},
+        ])
+    return out
+
+
+def test_ledger_driver_writer_reads_like_spark_writer(spark, tmp_path, ho_chi_minh_tz):
+    """Part files from the earlier Spark append and from the driver-side
+    pyarrow append read back identically, timestamps included, with the
+    process in UTC+7 and the session on UTC; a hidden temp file left by
+    a crashed append is invisible to every reader."""
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    runs = _ledger_runs()
+    ledgers = {}
+    for kind in ("spark", "driver", "mixed"):
+        led = RunLedger(spark, str(tmp_path / kind))
+        for i, pair in enumerate(runs):
+            if kind == "spark" or (kind == "mixed" and i % 2 == 0):
+                _spark_append(spark, led.path, pair)
+            else:
+                led._append(pair)
+        ledgers[kind] = led
+    mixed = ledgers["mixed"]
+    # a crashed append: its hidden temp file holds half a parquet file
+    whole = next(f for f in os.listdir(mixed.path) if f.endswith(".parquet"))
+    with open(os.path.join(mixed.path, whole), "rb") as fh:
+        half = fh.read()[:100]
+    with open(os.path.join(mixed.path, ".part-crashed.parquet.tmp"), "wb") as fh:
+        fh.write(half)
+
+    # naive times read back as the same wall-clock values
+    want = {
+        r["log_id"]: (r.get("start_time"), r.get("end_time"), r.get("duration_seconds"))
+        for pair in runs for r in pair
+    }
+    for kind, led in ledgers.items():
+        got = {
+            r["log_id"]: (r["start_time"], r["end_time"], r["duration_seconds"])
+            for r in led._read().collect()
+        }
+        assert got == want, kind
+
+    def views(led):
+        return [
+            sorted(tuple(r) for r in v.collect())
+            for v in (led.latest_status(), led.success_rate_view(), led.volume_drift_view())
+        ]
+
+    base = views(ledgers["spark"])
+    assert views(ledgers["driver"]) == base
+    assert views(mixed) == base
+    for led in ledgers.values():
+        assert led.is_done("extract_topcv", D1)  # Success after a Failed
+        assert led.is_done("extract_jobsgo", D2)
+        assert not led.is_done("load_to_wh", D1 + datetime.timedelta(days=3))
+        assert not led.is_done("load_to_wh", D1)  # no row at all
+
+
+@pytest.mark.parametrize(
+    "foreign",
+    [
+        # another table's file: key columns only, rows_processed as text
+        {"log_id": [1], "process": ["extract_topcv"], "run_date": [D2],
+         "status": ["Success"], "rows_processed": ["12"]},
+        # every ledger column, but run_date stored as a string
+        {"log_id": [1], "process": ["extract_topcv"], "run_date": [str(D2)],
+         "status": ["Success"], "rows_processed": [12], "file_path": [None],
+         "start_time": [None], "end_time": [None], "duration_seconds": [None],
+         "error_message": [None]},
+    ],
+    ids=["foreign_columns", "foreign_types"],
+)
+def test_ledger_foreign_part_file_fails_loudly(spark, tmp_path, foreign):
+    """A part file whose columns or types differ from RUN_LEDGER makes
+    the gate and the Spark read raise, naming the file, instead of
+    silently matching nothing."""
+    led = RunLedger(spark, str(tmp_path / "ledger"))
+    lid = led.open_run("extract_topcv", D1)
+    led.close_run(lid, "extract_topcv", D1, "Success", rows_processed=5)
+    assert led.is_done("extract_topcv", D1)
+
+    pq.write_table(pa.table(foreign), os.path.join(led.path, "part-foreign.parquet"))
+    with pytest.raises(ValueError, match="part-foreign.parquet"):
+        led.is_done("extract_topcv", D2)
+    with pytest.raises(ValueError, match="part-foreign.parquet"):
+        led._read()
+    with pytest.raises(ValueError, match="part-foreign.parquet"):
+        led.latest_status()
 
 
 def test_daily_expectations_gate(spark, tmp_path):

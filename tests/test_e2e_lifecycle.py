@@ -6,6 +6,9 @@ This is the reference's cron day, end to end, in one Catalyst session
 from __future__ import annotations
 
 import datetime
+import functools
+import inspect
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -269,3 +272,130 @@ def test_fourth_day_erasure_request(spark, tmp_path):
         for r in led.latest_status().collect()
     }
     assert st[("erasure_request", str(D2))] == "Success"
+
+
+# two sources; blank job ids and titles are dropped by the extract filter
+DAILY_FEED = {
+    D1: {
+        "topcv_jobs": [
+            ("t1", "Dev", "ACME", "10 - 15 triệu"), ("g1", "QA", "Beta", "Tới 20 triệu"),
+            ("t2", "Ops", "ACME", "Thỏa thuận"), ("", "Ghost", "ACME", "x"),
+            ("  ", "Blank", "Beta", "x"), ("t7", "", "Beta", "x"),
+        ],
+        "jobsgo_jobs": [("j1", "PM", "Gamma", "Trên 25 triệu"), ("j2", "BA", "Gamma", "")],
+    },
+    D2: {
+        "topcv_jobs": [
+            ("t1", "Dev", "ACME", "Trên 25 triệu"), ("t9", "Intern", "ACME", "Thỏa thuận"),
+            ("", "Ghost", "ACME", "x"),
+        ],
+        "jobsgo_jobs": [("j1", "PM", "Gamma", "Trên 25 triệu"), ("j3", "QC", "Delta", "")],
+    },
+}
+
+
+def _daily_setup(tmp_path):
+    from data_warehouse_nhom8_spark.pipeline.config import EngineConfig
+
+    cfg = EngineConfig(
+        bronze_path=str(tmp_path / "bronze"),
+        staging_path=str(tmp_path / "staging"),
+        warehouse_path=str(tmp_path / "warehouse"),
+        datamart_path=str(tmp_path / "dm"),
+        ledger_path=str(tmp_path / "ledger"),
+    )
+    conns = {
+        src: (lambda s, d: connector_for(DAILY_FEED[d][s])(s, d)) for src in DAILY_FEED[D1]
+    }
+    return cfg, conns
+
+
+def _assert_report_matches_tables(spark, cfg, day, report):
+    """Every count the daily run reported or ledgered equals a re-read
+    of what it wrote."""
+    from data_warehouse_nhom8_spark.sources.snapshots import snapshot_read
+
+    bronze = read_day(spark, cfg.bronze_path, day)
+    extracted = {src: bronze.filter(F.col("source") == src).count() for src in DAILY_FEED[day]}
+    for src, n in report["extract"].items():
+        assert n == extracted[src], src
+    assert report["staging_rows"] == snapshot_read(spark, cfg.staging_path).count()
+    wh = snapshot_read(spark, cfg.warehouse_path)
+    assert report["warehouse_rows"] == wh.count()
+    for name, n in report["datamart"].items():
+        assert n == spark.read.parquet(f"{cfg.datamart_path}/{name}").count(), name
+    ledgered = {
+        r["process"]: r["rows_processed"]
+        for r in RunLedger(spark, cfg.ledger_path).latest_status().collect()
+        if r["run_date"] == day
+    }
+    m = merge_metrics(wh, day)
+    assert ledgered["load_to_wh"] == m["expired_today"] + m["inserted_today"]
+    for src, n in extracted.items():
+        assert ledgered[f"extract_{src}"] == n, src
+
+
+def test_daily_counts_are_observed_on_the_writes(spark, tmp_path):
+    """The daily run's counts come from observations on its writes; they
+    equal a count or merge_metrics of the re-read tables on both days
+    and on a rerun whose merge the ledger gate skips."""
+    from data_warehouse_nhom8_spark.pipeline.daily import run_daily_pipeline
+
+    cfg, conns = _daily_setup(tmp_path)
+    r1 = run_daily_pipeline(spark, cfg, conns, D1)
+    assert r1["extract"] == {"topcv_jobs": 3, "jobsgo_jobs": 2}  # 3 blank-key rows dropped
+    _assert_report_matches_tables(spark, cfg, D1, r1)
+
+    r2 = run_daily_pipeline(spark, cfg, conns, D2)
+    assert r2["extract"] == {"topcv_jobs": 2, "jobsgo_jobs": 2}
+    assert r2["warehouse_rows"] == 9  # 5 day-1 versions + 4 day-2 inserts (t1, j1 re-versioned)
+    _assert_report_matches_tables(spark, cfg, D2, r2)
+
+    r3 = run_daily_pipeline(spark, cfg, conns, D2)  # merge skipped by the gate
+    assert r3["extract"] == {}
+    assert r3["warehouse_rows"] == r2["warehouse_rows"]
+    _assert_report_matches_tables(spark, cfg, D2, r3)
+
+
+def test_daily_spark_jobs_pinned(spark, tmp_path, monkeypatch):
+    """Day 2's Spark jobs, counted from the status store: only the data
+    writes launch jobs — none inside a RunLedger method and no
+    DataFrame.count. Counters only, never seconds."""
+    from data_warehouse_nhom8_spark.pipeline.daily import run_daily_pipeline
+
+    cfg, conns = _daily_setup(tmp_path)
+    run_daily_pipeline(spark, cfg, conns, D1)
+
+    sc = spark.sparkContext
+    tag = f"pin-{uuid.uuid4().hex[:8]}"
+
+    def in_group(fn, group):
+        @functools.wraps(fn)
+        def wrapper(*args, **kwargs):
+            prev = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setJobGroup(group, group)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", prev)
+
+        return wrapper
+
+    for name, fn in list(vars(RunLedger).items()):
+        if inspect.isfunction(fn):
+            monkeypatch.setattr(RunLedger, name, in_group(fn, f"{tag}-ledger"))
+    df_cls = type(spark.range(1))
+    monkeypatch.setattr(df_cls, "count", in_group(df_cls.count, f"{tag}-count"))
+    sc.setJobGroup(f"{tag}-day", "day 2")
+    try:
+        run_daily_pipeline(spark, cfg, conns, D2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = {
+        g: len(sc.statusTracker().getJobIdsForGroup(f"{tag}-{g}"))
+        for g in ("day", "ledger", "count")
+    }
+    assert jobs["ledger"] == 0, jobs
+    assert jobs["count"] == 0, jobs
+    assert 0 < sum(jobs.values()) <= 40, jobs
